@@ -204,7 +204,7 @@ object Bench {
     // driver's capture window). stdout now carries ONLY a short summary
     // line (total + counts + pointer to the committed file); the full
     // per-query map lives in BENCH_LOCAL.json.
-    val short = s"""{"metric":"total","value":$total,"unit":"sec","n":$n,"failed":$failed,"retimed":$rts,"plan_changed":$pch,"probe_ms":$probe,"sf":"$sfDir","file":"BENCH_LOCAL.json"}"""
+    val short = s"""{"metric":"total","value":$total,"unit":"sec","n":$n,"failed":$failed,"retimed":$rts,"plan_changed":$pch,"probe_ms":$probe,"sf":"$sfDir","file":"$defaultBenchFile"}"""
     if (only.isEmpty) {  // a filtered dev run must not clobber the full record
       // path is env-overridable and falls back to the working directory so
       // the bench is runnable outside this container's checkout layout

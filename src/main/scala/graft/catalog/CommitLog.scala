@@ -6,9 +6,11 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.metadata.FileMetaData
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.GraftFooterSchemaShim
 import org.apache.spark.sql.functions.{col, input_file_name, lit}
 
 /** Per-file min/max of one column, harvested from the parquet footer at
@@ -161,6 +163,35 @@ object CommitLog {
   private[catalog] def sidecarLock(root: String): Object =
     sidecarLocks.computeIfAbsent(
       new org.apache.hadoop.fs.Path(root).toUri.getPath, _ => new Object)
+
+  /** Process-wide footer-schema cache of pool files, keyed by (qualified
+    * path, footer-converter conf key), least-recently-used first out
+    * past [[PoolSchemaCap]] entries. Pool files are uuid-named and
+    * written once, so an entry never goes stale; the conf key retires
+    * conversions of footers without Spark's schema metadata when the
+    * converter's confs change.
+    */
+  private val PoolSchemaCap = 16384
+  private val poolSchemas =
+    new java.util.LinkedHashMap[(String, Int), org.apache.spark.sql.types.StructType](
+      256, 0.75f, true) {
+      override def removeEldestEntry(e: java.util.Map.Entry[(String, Int),
+          org.apache.spark.sql.types.StructType]): Boolean = size() > PoolSchemaCap
+    }
+  // the files of one commit share a schema: keep one instance of it
+  private var lastPooledSchema: org.apache.spark.sql.types.StructType = null
+
+  private[catalog] def poolSchema(key: (String, Int))(
+      load: => org.apache.spark.sql.types.StructType): org.apache.spark.sql.types.StructType =
+    poolSchemas.synchronized(Option(poolSchemas.get(key))).getOrElse {
+      val s = load
+      poolSchemas.synchronized {
+        val kept = if (s == lastPooledSchema) lastPooledSchema else s
+        lastPooledSchema = kept
+        poolSchemas.put(key, kept)
+        kept
+      }
+    }
 }
 
 /** Versioned commit log over an immutable parquet file pool — snapshot
@@ -585,8 +616,8 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     * a long table) upcasts silently; anything else fails LOUDLY. Without
     * this, the name-only schema gate lets a type-drifted batch through,
     * union coercion rewrites the touched files at the coerced type while
-    * carried files keep the old one — and the next mergeSchema read of
-    * the mixed pool CRASHES (int32 and int64 footers cannot merge): a
+    * carried files keep the old one — and the next read of the mixed
+    * pool CRASHES (int32 and int64 footer schemas cannot merge): a
     * silently-corrupted-table class of bug. A batch that truly needs a
     * WIDER type goes through ALTER COLUMN TYPE first (the `_widen`
     * plane, q_type_widen) — widening is a table decision, never a merge
@@ -933,9 +964,11 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     * row groups, straight from the parquet footer — no data pages are
     * read, so the cost is O(columns), not O(rows). A column whose stats
     * are missing in ANY row group is dropped (conservative: the file
-    * stays a candidate for every predicate on that column).
+    * stays a candidate for every predicate on that column). The footer's
+    * file metadata comes back too, for [[rememberSchema]] once the file
+    * is pooled.
     */
-  private def footerInfo(p: Path): (Long, Map[String, ColStats]) = {
+  private def footerInfo(p: Path): (Long, Map[String, ColStats], FileMetaData) = {
     val reader = ParquetFileReader.open(HadoopInputFile.fromPath(p, hfs.getConf))
     try {
       val rowCount = reader.getFooter.getBlocks.asScala.map(_.getRowCount).sum
@@ -970,7 +1003,7 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
           }
         }
       }
-      (rowCount, (acc -- bad).toMap)
+      (rowCount, (acc -- bad).toMap, reader.getFileMetaData)
     } finally reader.close()
   }
 
@@ -1010,15 +1043,16 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     */
   private val DvKeys = Seq("_graft_del_file", "_graft_del_pos")
 
-  /** Union of a version's deletion-vector files, or None when the
-    * version carries no tombstones (the fast path: reads stay the plain
-    * parquet scan, zero overhead).
+  /** Union of a version's deletion-vector files (`dvNamesOf` its
+    * manifest), or None when the version carries no tombstones (the
+    * fast path: reads stay the plain parquet scan, zero overhead). Their
+    * schema resolves like the data files' ([[poolSchemaOf]]), so a MoR
+    * read runs no inference job either.
     */
-  private def dvFrame(v: Long): Option[DataFrame] = dvFrameOf(dvFiles(v))
-
   private def dvFrameOf(names: Seq[String]): Option[DataFrame] =
     if (names.isEmpty) None
-    else Some(spark.read.parquet(names.map(n => new Path(dataDir, n).toString): _*)
+    else Some(poolSchemaOf(names).fold(spark.read)(spark.read.schema)
+      .parquet(names.map(n => new Path(dataDir, n).toString): _*)
       .select(DvKeys.map(col): _*))
 
   /** Manifest names are dataDir-relative, EXCEPT shallow-clone lines,
@@ -1028,20 +1062,14 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
   private def isAbsoluteName(n: String): Boolean =
     n.startsWith("/") || n.contains("://")
 
-  /** Parquet reader for pool files: basePath (hive partition-column
-    * rehydration) only when every name is dataDir-relative — an
-    * absolute shallow-clone reference lives outside this table's root,
-    * where a basePath that is not an ancestor is a hard error (clones
-    * are always unpartitioned, so basePath is a no-op for them anyway).
-    */
   /** Physical read schema for a type-WIDENED table (`_widen.json` marker
     * beside the log, written by ALTER COLUMN ... TYPE): old files keep
-    * their narrow physical types, so a merged-schema read would die on
+    * their narrow physical types, so a merged footer schema would die on
     * the int-vs-bigint conflict. Passing the declared schema explicitly
     * lets the parquet readers promote per file (int32→int64,
     * float→double, decimal widening — native in both the vectorized and
-    * row-based readers). None on never-widened tables: their reads stay
-    * byte-identical to the historical mergeSchema path.
+    * row-based readers). None on never-widened tables: their reads take
+    * the merged footer schema of [[poolSchemaOf]].
     */
   private def widenedReadSchema: Option[org.apache.spark.sql.types.StructType] =
     try {
@@ -1063,11 +1091,55 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
       }
     } catch { case scala.util.control.NonFatal(_) => None }
 
+  /** Qualified path of a pool file: its key in the schema cache and the
+    * order in which `mergeSchema` inference would merge it.
+    */
+  private def qualifiedPool(n: String): Path = {
+    val p = new Path(dataDir, n)
+    (if (isAbsoluteName(n)) HadoopFs.fs(spark, n) else hfs).makeQualified(p)
+  }
+
+  /** Cache `meta`, the open footer of a file just moved to `pooled`. */
+  private def rememberSchema(pooled: Path, meta: FileMetaData): Unit = {
+    val q = hfs.makeQualified(pooled)
+    CommitLog.poolSchema((q.toString, GraftFooterSchemaShim.converterKey(spark)))(
+      GraftFooterSchemaShim.footerSchema(spark, q, meta)): Unit
+  }
+
+  /** The schema Spark's `mergeSchema` inference would give the pool
+    * files `names`, resolved on the driver without a job: each file's
+    * footer schema from the process-wide cache ([[CommitLog.poolSchema]],
+    * a miss reads that one footer here), merged with Spark's own rule
+    * in Spark's order — sorted by qualified path, so the columns of the
+    * lexicographically first file lead.
+    */
+  private def poolSchemaOf(names: Seq[String]): Option[org.apache.spark.sql.types.StructType] = {
+    val ck = GraftFooterSchemaShim.converterKey(spark)
+    GraftFooterSchemaShim.merge(spark, names.map(qualifiedPool).sortBy(_.toString).map { p =>
+      CommitLog.poolSchema((p.toString, ck)) {
+        val reader = ParquetFileReader.open(HadoopInputFile.fromPath(p, hfs.getConf),
+          org.apache.parquet.HadoopReadOptions.builder(hfs.getConf, p)
+            .withMetadataFilter(
+              org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS)
+            .build())
+        try GraftFooterSchemaShim.footerSchema(spark, p, reader.getFileMetaData)
+        finally reader.close()
+      }
+    })
+  }
+
+  /** Parquet reader for pool files, its schema fixed up front: the
+    * widened declared schema, else [[poolSchemaOf]] — so building a read
+    * runs no schema-inference job. basePath (hive partition-column
+    * rehydration; partition columns still come from path inference)
+    * only when every name is dataDir-relative — an absolute
+    * shallow-clone reference lives outside this table's root, where a
+    * basePath that is not an ancestor is a hard error (clones are
+    * always unpartitioned, so basePath is a no-op for them anyway).
+    */
   private def poolReader(names: Seq[String]): org.apache.spark.sql.DataFrameReader = {
-    val r = widenedReadSchema match {
-      case Some(s) => spark.read.schema(s)
-      case None    => spark.read.option("mergeSchema", "true")
-    }
+    val r = widenedReadSchema.orElse(poolSchemaOf(names))
+      .fold(spark.read)(spark.read.schema)
     if (names.exists(isAbsoluteName)) r else r.option("basePath", dataDir.toString)
   }
 
@@ -1278,7 +1350,8 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     * MERGE/UPDATE) share the same pooling discipline.
     */
   private def poolFromStage(stage: Path, op: String): Seq[String] = {
-    // one footer read per part yields BOTH the row count and the stats;
+    // one footer read per part yields the row count, the stats AND the
+    // schema the pool read will need;
     // zero-row parts (Spark writes schema-only files for empty partitions
     // of union/anti-join plans) are dropped here — they would pollute
     // every future manifest as stats-less, never-prunable entries
@@ -1286,14 +1359,16 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
       .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
       .sortBy(_.getPath.getName)
       .map(f => (f.getPath, f.getLen, footerInfo(f.getPath)))
-      .filter { case (_, _, (rows, _)) => rows > 0 }
+      .filter { case (_, _, (rows, _, _)) => rows > 0 }
     val uuid = java.util.UUID.randomUUID().toString.take(8)
     hfs.mkdirs(dataDir)
     hfs.mkdirs(commitsDir)
-    val lines = parts.zipWithIndex.map { case ((src, len, (rows, st)), i) =>
+    val lines = parts.zipWithIndex.map { case ((src, len, (rows, st, meta)), i) =>
       val name = f"$uuid-part$i%05d.parquet"
-      if (!hfs.rename(src, new Path(dataDir, name)))
+      val dest = new Path(dataDir, name)
+      if (!hfs.rename(src, dest))
         throw new java.io.IOException(s"$op: could not move $src into the pool")
+      rememberSchema(dest, meta)
       s"$name\t${statsJson(st, rows, len)}"
     }
     hfs.delete(stage, true)
@@ -1398,7 +1473,7 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     hfs.mkdirs(commitsDir)
     val lines = parts.sortBy(_._1.getName).zipWithIndex.map {
       case ((src, len, subdirs), i) =>
-        val (rows, st) = footerInfo(src)
+        val (rows, st, meta) = footerInfo(src)
         if (rows == 0L) { hfs.delete(src, false); None }
         else {
           val name = (subdirs :+ f"$uuid-part$i%05d.parquet").mkString("/")
@@ -1406,6 +1481,7 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
           hfs.mkdirs(dest.getParent)
           if (!hfs.rename(src, dest))
             throw new java.io.IOException(s"$op: could not move $src into the pool")
+          rememberSchema(dest, meta)
           val merged = st ++ partValueStats(subdirs, colType)
           Some(s"$name\t${statsJson(merged, rows, len)}")
         }
@@ -1533,11 +1609,13 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     hfs.mkdirs(commitsDir)
     val newLines = paths.sortBy(_.getName)
       .map(p => (p, hfs.getFileStatus(p).getLen, footerInfo(p)))
-      .filter { case (_, _, (rows, _)) => rows > 0 }
-      .zipWithIndex.map { case ((src, len, (rows, st)), i) =>
+      .filter { case (_, _, (rows, _, _)) => rows > 0 }
+      .zipWithIndex.map { case ((src, len, (rows, st, meta)), i) =>
         val name = f"$uuid-part$i%05d.parquet"
-        if (!hfs.rename(src, new Path(dataDir, name)))
+        val dest = new Path(dataDir, name)
+        if (!hfs.rename(src, dest))
           throw new java.io.IOException(s"commitPooledFiles: could not move $src")
+        rememberSchema(dest, meta)
         s"$name\t${statsJson(st, rows, len)}"
       }
     val pooledPaths = newLines.map(l => new Path(dataDir, l.split('\t').head))
@@ -1639,10 +1717,13 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
       val dst = new Path(dataDir, name)
       if (!org.apache.hadoop.fs.FileUtil.copy(srcFs, src, hfs, dst, false, hfs.getConf))
         throw new java.io.IOException(s"commitCopiedWithTombstones: copy of $src failed")
-      val (rows, st) = footerInfo(dst)
+      val (rows, st, meta) = footerInfo(dst)
       if (rows == 0L) { hfs.delete(dst, false); None }
-      else Some((src.toUri.getPath, name,
-        s"$name\t${statsJson(st, rows, hfs.getFileStatus(dst).getLen)}"))
+      else {
+        rememberSchema(dst, meta)
+        Some((src.toUri.getPath, name,
+          s"$name\t${statsJson(st, rows, hfs.getFileStatus(dst).getLen)}"))
+      }
     }
     val dataLines = pooled.map(_._3)
     val tombLines = tombs match {
@@ -3428,10 +3509,10 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     }
     val pred = ranges.map { case (c, lo, hi) => col(c).between(lit(lo), lit(hi)) }
       .reduce(_ && _)
-    if (names.isEmpty) readVersion(v)
+    if (names.isEmpty) readLines(lines)
     // all files pruned: zero-row frame with the table schema, no scan
     // (OptimizeLimitZero folds the limit-0 into an empty relation)
-    else if (candidates.isEmpty) readVersion(v).filter(pred).limit(0)
+    else if (candidates.isEmpty) readLines(lines).filter(pred).limit(0)
     else readFiles(candidates, dvFrameOf(dvNamesOf(lines)), partTypesOf(lines))
       .filter(pred)
   }
@@ -3455,7 +3536,7 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     * the touched-file rewrite). Updates must carry the table's schema;
     * with `evolve = true` the batch may ALSO carry new columns — the
     * table schema widens in the same commit (existing rows read the new
-    * columns as NULL through the pool's mergeSchema read; untouched
+    * columns as NULL through the pool read's merged footer schema; untouched
     * files are never rewritten for a schema change). The upstream-
     * added-a-field case a long-lived CDC pipeline hits first.
     */
@@ -3474,7 +3555,7 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
       val lines = manifestLines(v)
       val partCols = partitionColsOf(lines)
       val partTypes = partTypesOf(lines)
-      val curSchema = readVersion(v).schema
+      val curSchema = readLines(lines).schema
       val cols = curSchema.fieldNames.toSeq
       val newCols = if (evolve) updates.columns.filterNot(cols.contains).toSeq
         else Seq.empty
@@ -3491,14 +3572,14 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
         enforceConstraints(upd, curCs, "merge"); validatedCs = curCs
       }
       val keys = upd.select(keyCol).distinct()
-      val touched = findTouched(lines, fileStats(v), keys, keyCol, partTypes = partTypes)
+      val touched = findTouched(lines, fileStatsOf(lines), keys, keyCol, partTypes = partTypes)
       val keptLines = lines.filterNot(l => touched(l.split('\t').head))
       val merged =
         if (touched.isEmpty) upd.select(outCols.map(col): _*)
         // tombstones apply BEFORE the key anti-join: a MoR-deleted row
         // must not resurrect through the rewrite; under evolution the
         // survivors pad the new columns with NULL (allowMissingColumns)
-        else readFiles(touched.toSeq.sorted, dvFrame(v), partTypes)
+        else readFiles(touched.toSeq.sorted, dvFrameOf(dvNamesOf(lines)), partTypes)
           .join(keys, Seq(keyCol), "left_anti")
           .select(cols.map(col): _*)
           .unionByName(upd.select(outCols.map(col): _*),
@@ -3540,12 +3621,12 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
       val lines = manifestLines(v)
       val partCols = partitionColsOf(lines)
       val partTypes = partTypesOf(lines)
-      val cols = readVersion(v).columns.toSeq
+      val cols = readLines(lines).columns.toSeq
       val keys = keys0.select(keyCol).distinct()
-      val touched = findTouched(lines, fileStats(v), keys, keyCol, partTypes = partTypes)
+      val touched = findTouched(lines, fileStatsOf(lines), keys, keyCol, partTypes = partTypes)
       if (touched.isEmpty) return v
       val keptLines = lines.filterNot(l => touched(l.split('\t').head))
-      val survivors = readFiles(touched.toSeq.sorted, dvFrame(v), partTypes)
+      val survivors = readFiles(touched.toSeq.sorted, dvFrameOf(dvNamesOf(lines)), partTypes)
         .join(keys, Seq(keyCol), "left_anti")
         .select(cols.map(col): _*)
       // partitioned survivors restage under their subdirs (see merge)
@@ -3582,8 +3663,8 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
       val lines = manifestLines(v)
       val partCols = partitionColsOf(lines)
       val partTypes = partTypesOf(lines)
-      val names = files(v)
-      val dv = dvFrame(v)
+      val names = dataNamesOf(lines)
+      val dv = dvFrameOf(dvNamesOf(lines))
       // discovery runs over the VISIBLE snapshot: a file whose only
       // matching rows are already tombstoned is not touched (no rewrite).
       // Discovery yields LEAF names (what input-file metadata exposes);
@@ -3609,7 +3690,7 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
       val survivorLines =
         if (touched.isEmpty) Seq.empty
         else {
-          val cols = readVersion(v).columns.toSeq
+          val cols = readLines(lines).columns.toSeq
           val survivors = readFiles(touched.toSeq.sorted, dv, partTypes)
             // SQL DELETE semantics: rows where the predicate is NULL survive
             .filter(!coalesce(cond, lit(false)))
@@ -3665,8 +3746,8 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
       val lines = manifestLines(v)
       val partCols = partitionColsOf(lines)
       val partTypes = partTypesOf(lines)
-      val names = files(v)
-      val dv = dvFrame(v)
+      val names = dataNamesOf(lines)
+      val dv = dvFrameOf(dvNamesOf(lines))
       // discovery over the VISIBLE snapshot, as in rewriteWhere: a file
       // whose only matching rows are tombstoned is not rewritten.
       val touchedLeaves: Set[String] =
@@ -3680,7 +3761,7 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
       if (touched.isEmpty) return v
       val keptLines = lines.filterNot(l =>
         !l.startsWith("#") && !l.startsWith("-") && touched(l.split('\t').head))
-      val cols = readVersion(v).columns.toSeq
+      val cols = readLines(lines).columns.toSeq
       val matched = coalesce(cond, lit(false))
       val setMap = sets.toMap
       // one pass over touched files: every column's new value is chosen
@@ -3748,9 +3829,9 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
       val lines = manifestLines(v)
       val partCols = partitionColsOf(lines)
       val partTypes = partTypesOf(lines)
-      val names = files(v)
+      val names = dataNamesOf(lines)
       if (names.isEmpty) return v
-      val visible = dvFrame(v).fold(withPos(names))(d =>
+      val visible = dvFrameOf(dvNamesOf(lines)).fold(withPos(names))(d =>
         withPos(names).join(d, DvKeys, "left_anti"))
       // matched rows carry their (file, pos) keys AND their data columns:
       // one frame feeds both the tombstones and the updated copies (the
@@ -3766,7 +3847,7 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
       val matched = if (condDeterministic) matched0 else matched0.localCheckpoint()
       val dvStaged = stageToPool(matched.select(DvKeys.map(col): _*), "updateWhereMoR")
       if (dvStaged.isEmpty) return v
-      val cols = readVersion(v).columns.toSeq
+      val cols = readLines(lines).columns.toSeq
       val setMap = sets.toMap
       val updated = matched.select(cols.map { c =>
         setMap.get(c) match {
@@ -3811,9 +3892,10 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     while (attempt < maxAttempts) {
       val v = currentVersion.getOrElse(throw new java.io.FileNotFoundException(
         s"no committed version under $tableRoot"))
-      val names = files(v)
+      val lines = manifestLines(v)
+      val names = dataNamesOf(lines)
       if (names.isEmpty) return v
-      val visible = dvFrame(v).fold(withPos(names))(d =>
+      val visible = dvFrameOf(dvNamesOf(lines)).fold(withPos(names))(d =>
         withPos(names).join(d, DvKeys, "left_anti"))
       val tombs = visible.filter(coalesce(cond, lit(false)))
         .select(DvKeys.map(col): _*)
@@ -3821,7 +3903,7 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
       if (staged.isEmpty) return v
       beforePublish(attempt, v + 1)
       if (publish(v + 1, stamped("delete_mor",
-        manifestLines(v) ++ staged.map("-" + _)))) return v + 1
+        lines ++ staged.map("-" + _)))) return v + 1
       racePause(attempt, v + 1)
       attempt += 1
     }
@@ -3839,19 +3921,20 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     while (attempt < maxAttempts) {
       val v = currentVersion.getOrElse(throw new java.io.FileNotFoundException(
         s"no committed version under $tableRoot"))
-      val names = files(v)
+      val lines = manifestLines(v)
+      val names = dataNamesOf(lines)
       if (names.isEmpty) return v
       val keys = keys0.select(keyCol).distinct()
       val bounds = keys.agg(org.apache.spark.sql.functions.min(keyCol),
         org.apache.spark.sql.functions.max(keyCol)).head()
       if (bounds.isNullAt(0)) return v
-      val stats = fileStats(v)
+      val stats = fileStatsOf(lines)
       val candidates = names.filter { n =>
         stats.get(n).flatMap(_.get(keyCol))
           .forall(_.overlaps(bounds.get(0), bounds.get(1)))
       }
       if (candidates.isEmpty) return v
-      val visible = dvFrame(v).fold(withPos(candidates))(d =>
+      val visible = dvFrameOf(dvNamesOf(lines)).fold(withPos(candidates))(d =>
         withPos(candidates).join(d, DvKeys, "left_anti"))
       val tombs = visible.join(keys, Seq(keyCol), "semi")
         .select(DvKeys.map(col): _*)
@@ -3859,7 +3942,7 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
       if (staged.isEmpty) return v
       beforePublish(attempt, v + 1)
       if (publish(v + 1, stamped("delete_mor",
-        manifestLines(v) ++ staged.map("-" + _)))) return v + 1
+        lines ++ staged.map("-" + _)))) return v + 1
       racePause(attempt, v + 1)
       attempt += 1
     }
@@ -3903,11 +3986,12 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
       val lines = manifestLines(v)
       val partCols = partitionColsOf(lines)
       val partTypes = partTypesOf(lines)
-      val curSchema = readVersion(v).schema
+      val curSchema = readLines(lines).schema
       val cols = curSchema.fieldNames.toSeq
       // schema evolution mirrors [[merge]]: with evolve=true the batch
       // may add new columns — appended rows carry them, existing files
-      // stay untouched and read the new columns as NULL (mergeSchema)
+      // stay untouched and read the new columns as NULL (merged footer
+      // schema of the pool read)
       val newCols = if (evolve) updates.columns.filterNot(cols.contains).toSeq
         else Seq.empty
       if (evolve) {
@@ -3923,7 +4007,7 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
         enforceConstraints(upd, curCs, "mergeMoR"); validatedCs = curCs
       }
       val keys = upd.select(keyCol).distinct()
-      val names = files(v)
+      val names = dataNamesOf(lines)
       // tombstone the old positions of matched keys — footer stats bound
       // the probe to the overlapping files before any row I/O
       val dvStaged: Seq[String] =
@@ -3931,7 +4015,7 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
         else {
           val bounds = keys.agg(org.apache.spark.sql.functions.min(keyCol),
             org.apache.spark.sql.functions.max(keyCol)).head()
-          val stats = fileStats(v)
+          val stats = fileStatsOf(lines)
           val candidates =
             if (bounds.isNullAt(0)) Seq.empty[String]
             else names.filter { n =>
@@ -3940,7 +4024,7 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
             }
           if (candidates.isEmpty) Seq.empty
           else {
-            val visible = dvFrame(v).fold(withPos(candidates))(d =>
+            val visible = dvFrameOf(dvNamesOf(lines)).fold(withPos(candidates))(d =>
               withPos(candidates).join(d, DvKeys, "left_anti"))
             stageToPool(visible.join(keys, Seq(keyCol), "semi")
               .select(DvKeys.map(col): _*), "mergeMoR")
@@ -4001,7 +4085,7 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
       val lines = manifestLines(v)
       txn.foreach { id => if (lines.contains(s"#txn:$id")) return v }
       val partCols = partitionColsOf(lines)
-      val curSchema = readVersion(v).schema
+      val curSchema = readLines(lines).schema
       val cols = curSchema.fieldNames.toSeq
       // schema evolution mirrors [[mergeMoR]]: with evolve=true the batch
       // may add new columns — a CDC replica must track its source through
@@ -4023,13 +4107,13 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
         enforceConstraints(ins, curCs, "applyChangesMoR"); validatedCs = curCs
       }
       val keys = deleteKeys0.select(keyCol).distinct()
-      val names = files(v)
+      val names = dataNamesOf(lines)
       val dvStaged: Seq[String] =
         if (names.isEmpty) Seq.empty
         else {
           val bounds = keys.agg(org.apache.spark.sql.functions.min(keyCol),
             org.apache.spark.sql.functions.max(keyCol)).head()
-          val stats = fileStats(v)
+          val stats = fileStatsOf(lines)
           val candidates =
             if (bounds.isNullAt(0)) Seq.empty[String]
             else names.filter { n =>
@@ -4038,7 +4122,7 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
             }
           if (candidates.isEmpty) Seq.empty
           else {
-            val visible = dvFrame(v).fold(withPos(candidates))(d =>
+            val visible = dvFrameOf(dvNamesOf(lines)).fold(withPos(candidates))(d =>
               withPos(candidates).join(d, DvKeys, "left_anti"))
             stageToPool(visible.join(keys, Seq(keyCol), "semi")
               .select(DvKeys.map(col): _*), "applyChangesMoR")
@@ -4078,14 +4162,14 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
     while (attempt < maxAttempts) {
       val v = currentVersion.getOrElse(throw new java.io.FileNotFoundException(
         s"no committed version under $tableRoot"))
-      val dvN = dvFiles(v)
+      val lines = manifestLines(v)
+      val dvN = dvNamesOf(lines)
       if (dvN.isEmpty) return (0, 0)
-      val dv = dvFrame(v).get
+      val dv = dvFrameOf(dvN).get
       val targets = collectNames(dv, DvKeys.head, "rewriteDeletes")
       // stale tombstones may name files a later op already removed;
       // tombstones carry LEAF names, manifests may carry partition subdirs
-      val touched = files(v).filter(n => targets(leafOf(n))).toSet
-      val lines = manifestLines(v)
+      val touched = dataNamesOf(lines).filter(n => targets(leafOf(n))).toSet
       val partCols = partitionColsOf(lines)
       val keptLines = lines.filterNot(l => l.startsWith("-") ||
         (!l.startsWith("#") && touched(l.split('\t').head)))
@@ -4150,8 +4234,8 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
       val lines = manifestLines(v)
       val partCols = partitionColsOf(lines)
       val partTypes = partTypesOf(lines)
-      val names = files(v)
-      val stats = fileStats(v)
+      val names = dataNamesOf(lines)
+      val stats = fileStatsOf(lines)
       def cmpSafe(tpe: String, edge: String): Option[Int] =
         scala.util.Try(ColStats.cmp(tpe, edge, cut)).toOption
       val dead = names.filter { n =>
@@ -4175,8 +4259,8 @@ class CommitLog(spark: SparkSession, tableRoot: String) {
       val survivorLines =
         if (straddle.isEmpty) Seq.empty
         else {
-          val dv = dvFrame(v)
-          val cols = readVersion(v).columns.toSeq
+          val dv = dvFrameOf(dvNamesOf(lines))
+          val cols = readLines(lines).columns.toSeq
           val survivors = readFiles(straddle.sorted, dv, partTypes)
             // NULL retention column survives (SQL DELETE semantics)
             .filter(!coalesce(col(column) < lit(cutoff), lit(false)))

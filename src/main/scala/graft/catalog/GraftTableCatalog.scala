@@ -565,8 +565,9 @@ class GraftTableCatalog extends TableCatalog with SupportsNamespaces
         schema = StructType(schema.fields.map { sf =>
           if (sf.name != name) sf else sf.copy(dataType = to)
         })
-        // the marker flips this table's library reads from mergeSchema to
-        // the explicit declared schema (CommitLog.widenedReadSchema)
+        // the marker flips this table's library reads from the merged
+        // footer schema to the explicit declared schema
+        // (CommitLog.widenedReadSchema)
         LogStore.write(fs, new Path(root, "_widen.json"),
           s"""{"widened":true}""".getBytes(java.nio.charset.StandardCharsets.UTF_8))
       case un: TableChange.UpdateColumnNullability if un.fieldNames().length == 1 =>

@@ -1737,7 +1737,8 @@ object CatalogSql {
     * pipeline hits. The merge widens the schema IN the same commit:
     * appended/rewritten rows carry the column, untouched files are
     * never rewritten for the schema change (carried by name), and
-    * existing rows read it as NULL through the pool's mergeSchema read.
+    * existing rows read it as NULL through the pool read's merged footer
+    * schema.
     * The flag-grouped rollup must equal DuckDB's closed-form recompute
     * — a NULL-defaulted old row landing in the wrong group, or a
     * dropped/duplicated upsert row, hash-mismatches.

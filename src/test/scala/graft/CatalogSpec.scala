@@ -851,6 +851,16 @@ class CatalogSpec extends AnyFunSuite {
     val vr = reader.restore(499L)
     assert(vr == 501L && reader.read().count() == 12475)
     assert(new Counting().currentVersion.contains(501L))
+    // a write op parses the head manifest once: that parse serves the
+    // schema, stats, deletion vectors and file list of the rewrite
+    def opensOf(op: CommitLog => Long): Int = {
+      val c = new Counting
+      op(c)
+      c.opens.get
+    }
+    assert(opensOf(_.merge(Seq(5L).toDF("k"), "k")) == 4)
+    assert(opensOf(_.deleteKeys(Seq(7L).toDF("k"), "k")) == 2)
+    assert(opensOf(_.updateWhere(col("k") === 9L, Seq("k" -> lit(9L)))) == 4)
   }
 
   test("audit log: append, lookup, guarded status update") {
